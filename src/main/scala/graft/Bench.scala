@@ -1,24 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Emits TWO kinds of record:
   *
   * 1. stdout, LAST line (printed twice — last-occurrence parse wins, and
   *    a duplicate guards against log interleaving clipping one copy): a
   *    SLIM summary that fits any tail window,
-  *    {"metric":"total","value":S,"unit":"sec","runs":N,"n":99,"sf":dir}
-  *    (~110 bytes). Rounds 5–8 proved no single line carrying a 99-query
-  *    map can survive the record-keeper's tail capture: the window is
-  *    2,000 bytes and a full-name 99-query map has a ~2.5 KB floor, so
-  *    the front of the line — including the opening `{"metric"` — was
-  *    truncated off and the official record parsed null four rounds
-  *    running, regardless of key order. The summary line carries only
-  *    scalars; the per-query map moves to the committed artifact.
+  *    {"metric":"total","value":S,"unit":"sec","runs":N,"n":99,"sf":dir,
+  *    "n_failed":0} (~150 bytes). Rounds 5–8 proved no single line
+  *    carrying a 99-query map can survive a 2,000-byte tail capture: a
+  *    full-name 99-query map has a ~2.5 KB floor, so the front of the
+  *    line — including the opening `{"metric"` — was truncated off and
+  *    the official record parsed null four rounds running, regardless of
+  *    key order. The summary line carries only scalars; the per-query
+  *    map moves to the committed artifact.
   *
   * 2. BENCH_LOCAL.json (repo root, committed, overwritten per run): the
-  *    FULL record — same scalars plus "unstable" and the complete
-  *    per-query map — pretty-printed one query per line so git diffs are
-  *    readable. This is where per-query timings live now.
+  *    FULL record — same scalars plus "unstable", "failed" and the
+  *    complete per-query map — pretty-printed one query per line so git
+  *    diffs are readable. This is where per-query timings live now.
   *
   * The full record is ALSO printed to stdout once, BEFORE the summary
   * lines: the parent fork's parser (and any human) reads the per-query
@@ -65,36 +64,29 @@ import org.apache.spark.sql.SparkSession
   * cross-check.
   */
 object Bench {
+  import Harness.{jsonNames, num}
 
   /** One full pass over SparkEntry.queries in THIS JVM (fresh-session
     * semantics: callers must not reuse a session across passes). */
-  private def runOnce(sfDir: String, cpus: String): Seq[(String, Double)] = {
-    // the round-14 engine configs (AQE advisory-size coalescing, SHJ
-    // allowed) now live in the shared GraftSession builder so the
-    // measured configuration is the shipped one (round-15 VERDICT #7)
+  private def runOnce(sfDir: String, cpus: String): Seq[Harness.Outcome[Long]] = {
+    // the shared GraftSession builder: the measured configuration is the
+    // shipped one
     val spark = GraftSession.local(cpus)
-    // warm up codegen/JIT + file-source paths once so the first measured
-    // query doesn't absorb session start-up cost
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-    val out = names.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val n = try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $name%-28s $sec%8.2fs  rows=$n")
-      name -> sec
-    }
+    Harness.warmUp(spark)
+    val out = Harness.countAll(spark, sfDir, Harness.select(""), "bench")
     spark.stop()
     out
   }
 
-  /** Locale-invariant fixed-point formatting: an `f"..."` interpolation
-    * uses the DEFAULT locale, and a comma-decimal locale (de_DE, fr_FR…)
-    * would emit `1,2345` — invalid JSON for the official record AND
-    * silently mis-parsed by forkOnce's `[0-9.eE+-]+` value regex. */
-  private def num(v: Double, decimals: Int = 4): String =
-    String.format(java.util.Locale.ROOT, s"%.${decimals}f",
-      java.lang.Double.valueOf(v))
+  /** Queries whose max/min run ratio exceeds 2×. A 0.0 sample (skipped
+    * run) gets a finite sentinel: a ratio of PositiveInfinity can't be
+    * compared sanely; 999 > 2 so the query still lands in "unstable". */
+  private def unstable(queries: Seq[(String, Double)],
+                       samples: Map[String, Seq[Double]]): String =
+    jsonNames(queries.map(_._1).filter { k =>
+      val xs = samples(k)
+      (if (xs.min > 0) xs.max / xs.min else if (xs.max == 0) 1.0 else 999.0) > 2.0
+    })
 
   /** Sidecar JSON: raw per-run samples plus the trimmed medians the
     * stdout line no longer carries — written to the sidecar + stderr,
@@ -111,26 +103,20 @@ object Bench {
     s"""{"samples":$ss,"medians":$ms}"""
   }
 
+  /** The full record on one line. A query that threw is in "failed" and
+    * in no timing: its elapsed time measures the exception, not the
+    * query. */
   private def jsonLine(queries: Seq[(String, Double)],
                        samples: Map[String, Seq[Double]], runs: Int,
-                       sfDir: String): String = {
+                       sfDir: String, failed: Seq[String]): String = {
     val qs = queries.map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
-    val spreads = queries.map { case (k, _) =>
-      val xs = samples(k)
-      // a 0.0 sample (skipped/failed run) gets a finite sentinel: a ratio
-      // of PositiveInfinity can't be compared sanely; 999 > 2 so the
-      // query still lands in "unstable"
-      k -> (if (xs.min > 0) xs.max / xs.min
-            else if (xs.max == 0) 1.0 else 999.0)
-    }
-    val unstable = spreads.collect { case (k, v) if v > 2.0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
     val total = queries.map(_._2).sum
     // "queries" LAST — on the one-line form the per-query map ends the
     // line; the pretty form (BENCH_LOCAL.json) reuses the same fields.
     s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$runs,""" +
-      s""""sf":"$sfDir","unstable":$unstable,"queries":$qs}"""
+      s""""sf":"$sfDir","unstable":${unstable(queries, samples)},""" +
+      s""""failed":${jsonNames(failed)},"queries":$qs}"""
   }
 
   /** Round-15 (VERDICT #1): a COMPACT per-query line the record-keeper's
@@ -152,21 +138,23 @@ object Bench {
       s""""n":${queries.size},"sf":"$sfDir","mins":$qs}"""
   }
 
-  /** The slim summary that is the LAST stdout line: scalars only, ~140
+  /** The slim summary that is the LAST stdout line: scalars only, ~150
     * bytes — guaranteed to fit the record-keeper's 2,000-byte tail window
     * whole (see the object scaladoc). Carries BOTH headline statistics:
     * "value" (per-query min across forks — the code-speed noise floor)
     * and "value_median" (per-query trimmed medians summed — the
     * expected-run statistic), so a reader of the round record can see
-    * the fork variance without digging out the committed artifact. */
+    * the fork variance without digging out the committed artifact.
+    * Failed queries are only counted here ("n_failed"); their names are
+    * on the full record. */
   private def summaryLine(queries: Seq[(String, Double)], runs: Int,
-                          sfDir: String,
-                          medians: Map[String, Double]): String = {
+                          sfDir: String, medians: Map[String, Double],
+                          nFailed: Int): String = {
     val total = queries.map(_._2).sum
     val medTotal = queries.map { case (k, _) => medians(k) }.sum
     s"""{"metric":"total","value":${num(total)},""" +
       s""""value_median":${num(medTotal)},"unit":"sec","runs":$runs,""" +
-      s""""n":${queries.size},"sf":"$sfDir"}"""
+      s""""n":${queries.size},"sf":"$sfDir","n_failed":$nFailed}"""
   }
 
   /** Full record, pretty-printed one query per line, for the committed
@@ -179,14 +167,7 @@ object Bench {
   private def prettyRecord(queries: Seq[(String, Double)],
                            samples: Map[String, Seq[Double]],
                            medians: Map[String, Double], runs: Int,
-                           sfDir: String): String = {
-    val spreads = queries.map { case (k, _) =>
-      val xs = samples(k)
-      k -> (if (xs.min > 0) xs.max / xs.min
-            else if (xs.max == 0) 1.0 else 999.0)
-    }
-    val unstable = spreads.collect { case (k, v) if v > 2.0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+                           sfDir: String, failed: Seq[String]): String = {
     val total = queries.map(_._2).sum
     val medianTotal = queries.map { case (k, _) => medians(k) }.sum
     val qs = queries.map { case (k, v) => s"""    "$k": ${num(v)}""" }
@@ -201,7 +182,8 @@ object Bench {
   "runs": $runs,
   "n": ${queries.size},
   "sf": "$sfDir",
-  "unstable": $unstable,
+  "unstable": ${unstable(queries, samples)},
+  "failed": ${jsonNames(failed)},
   "queries": {
 $qs
   },
@@ -213,9 +195,10 @@ $ms
   }
 
   /** Fork a fresh child JVM running one inline pass; returns its
-    * per-query timings parsed from the child's JSON line. Propagates this
-    * JVM's flags (-Xmx, --add-opens, -D…) and classpath verbatim. */
-  private def forkOnce(run: Int, runs: Int): Option[Map[String, Double]] = {
+    * per-query timings and failed queries parsed from the child's JSON
+    * line. Propagates this JVM's flags (-Xmx, --add-opens, -D…) and
+    * classpath verbatim. */
+  private def forkOnce(run: Int, runs: Int): Option[(Map[String, Double], Seq[String])] = {
     import scala.jdk.CollectionConverters._
     val javaBin = new java.io.File(new java.io.File(
       System.getProperty("java.home"), "bin"), "java").getAbsolutePath
@@ -248,13 +231,15 @@ $ms
         .map(_.group(1)).getOrElse("")
       val pairs = "\"([^\"]+)\":([0-9.eE+-]+)".r.findAllMatchIn(q)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      val failed = "\"failed\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json.get)
+        .toSeq.flatMap(m => "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)))
       if (pairs.isEmpty) { System.err.println(s"[bench] run $run: empty parse — skipped"); None }
-      else Some(pairs)
+      else Some((pairs, failed))
     }
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Harness.DefaultSfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_SAMPLES",
@@ -276,7 +261,7 @@ $ms
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     def emit(mins: Seq[(String, Double)], bySample: Map[String, Seq[Double]],
-             n: Int): Unit = {
+             n: Int, failed: Seq[String]): Unit = {
       val meds = mins.map { case (k, _) => k -> median(bySample(k)) }.toMap
       val ss = samplesJson(mins, bySample, meds)
       System.err.println(s"[bench] sidecar: $ss")
@@ -286,7 +271,7 @@ $ms
       if (localArtifact.nonEmpty) {
         try java.nio.file.Files.writeString(
           java.nio.file.Paths.get(localArtifact),
-          prettyRecord(mins, bySample, meds, n, sfDir))
+          prettyRecord(mins, bySample, meds, n, sfDir, failed))
         catch { case e: java.io.IOException =>
           System.err.println(s"[bench] BENCH_LOCAL write failed: ${e.getMessage}") }
       }
@@ -295,23 +280,27 @@ $ms
       // VERDICT r14 #1), then the slim summary TWICE and LAST — the only
       // thing the tail window must keep (last occurrence wins downstream;
       // the duplicate survives one copy being clipped by interleaving)
-      println(jsonLine(mins, bySample, n, sfDir))
+      println(jsonLine(mins, bySample, n, sfDir, failed))
       println(perQueryLine(mins, n, sfDir))
-      val slim = summaryLine(mins, n, sfDir, meds)
+      val slim = summaryLine(mins, n, sfDir, meds, failed.size)
       println(slim)
       println(slim)
     }
     if (runs <= 1) {
       val r = runOnce(sfDir, cpus)
-      emit(r, r.map { case (k, v) => k -> Seq(v) }.toMap, 1)
+      val ok = Harness.timings(r)
+      emit(ok, ok.map { case (k, v) => k -> Seq(v) }.toMap, 1, Harness.failed(r))
     } else {
       val samples = (1 to runs).flatMap(forkOnce(_, runs))
       require(samples.nonEmpty, s"all $runs forked bench runs failed")
-      val names = samples.head.keys.toSeq.sorted
-      val bySample = names.map(n => n -> samples.map(_(n))).toMap
+      // a query that threw in any run is failed: its other runs' timings
+      // are left out with it
+      val failed = samples.flatMap(_._2).distinct.sorted
+      val names = (samples.head._1.keySet -- failed).toSeq.sorted
+      val bySample = names.map(n => n -> samples.map(_._1(n))).toMap
       // headline: per-query MIN across the isolated forks (noise floor)
       val mins = names.map(n => n -> bySample(n).min)
-      emit(mins, bySample, samples.size)
+      emit(mins, bySample, samples.size, failed)
     }
   }
 }

@@ -37,9 +37,9 @@ object GraftSession {
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
     .config("spark.sql.join.preferSortMergeJoin", "false")
 
-  /** The harness session every main (Bench/Verify/PlanDump/MicroBench/
-    * ProbeJobs) runs: [[recommended]] plus the LOCAL-HARNESS bits that a
-    * production caller would own instead — `local[cpus]` master with
+  /** The harness session every main (Bench, Verify, Harness) runs:
+    * [[recommended]] plus the LOCAL-HARNESS bits that a production caller
+    * would own instead — `local[cpus]` master with
     * `shuffle.partitions = cpus` (the driver's scaling contract:
     * $SPARK_GRAFT_CPUS governs both), the legacy nanos flag for the
     * older testdata generation's TIMESTAMP(NANOS) parquet, and no UI. */

@@ -431,13 +431,15 @@ object SparkEntry {
     li(s, d).select(
         col("l_orderkey"), col("l_linenumber"),
         RoundHalfDown(col("l_extendedprice") / lit(7.0d), 3).as("rhd"))
-      .orderBy("l_orderkey", "l_linenumber")
+      // (l_orderkey, l_linenumber) is not unique in the generated
+      // lineitem, and tied rows can differ in price
+      .orderBy("l_orderkey", "l_linenumber", "rhd")
   private val oF6 =
     """SELECT l_orderkey, l_linenumber,
       |  CASE WHEN l_extendedprice / 7.0 >= 0
       |       THEN ceil(l_extendedprice / 7.0 * 1000 - 0.5) / 1000
       |       ELSE floor(l_extendedprice / 7.0 * 1000 + 0.5) / 1000 END AS rhd
-      |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin
+      |FROM lineitem ORDER BY l_orderkey, l_linenumber, rhd""".stripMargin
 
   private def qF10format(s: SparkSession, d: String): DataFrame =
     ord(s, d).select(col("o_orderkey"),

@@ -2320,13 +2320,6 @@ object TextSimQueries {
           build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else build)
   }
-  /** Drop (and unpersist) everything cached for `s`. Kept for long-lived
-    * sessions that want to reclaim the cache; the bench no longer needs
-    * it — repeat runs are isolated in fresh JVMs (round 5 showed repeat
-    * runs in ONE session accumulate enough persist/cleaner/GC state to
-    * inflate heavy queries 3–9×, even with this cleared between runs). */
-  private[graft] def clearSessionCache(s: SparkSession): Unit =
-    shingleCache.remove(s).foreach(_.values.foreach(_.unpersist()))
   private[graft] def sharedShingles(s: SparkSession, d: String): DataFrame =
     cachedPerDir(s, s"shingles|$d") {
       Dedup.shingleHashRows(docs(s, d), "doc_id", "text", n = 3)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,7 +9,7 @@ object Verify {
     // wrong arity must fail loudly, not as an index error)
     val (sfDir, outDir, only) = args match {
       case Array(sf, out)       => (sf, out, None)
-      case Array(sf, out, filt) => (sf, out, Some(filt.split(",").toSeq))
+      case Array(sf, out, filt) => (sf, out, Some(filt))
       case _ =>
         System.err.println(
           s"usage: graft.Verify <sfDir> <outDir> [namePrefix,...] — got ${args.length} args")
@@ -18,21 +17,18 @@ object Verify {
         return
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val selected = Harness.select(only.getOrElse(""))
     // the shared GraftSession harness builder (round-15 VERDICT #7):
     // verify runs under the SAME engine configs the bench measures, so
     // the oracle gate covers the measured configuration
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-      System.err.println(s"[verify] running $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    selected.foreach { q =>
+      System.err.println(s"[verify] running ${q._1}")
+      Harness.run(spark, sfDir, q)(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q._1}"))
+        .result.failed.foreach(e =>
+          System.err.println(s"[verify] ${q._1} failed: ${e.getMessage}"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -46,8 +42,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    val names = selected.map(_._1).toSet
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.exists(k.startsWith)) }
+      .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // a filtered dump is NOT a full correctness run: mark the outDir so a
@@ -56,13 +53,12 @@ object Verify {
     if (only.isEmpty) // a full run into a reused outDir clears a stale marker
       Files.deleteIfExists(Paths.get(s"$outDir/PARTIAL_RUN.txt"))
     only.foreach { filt =>
-      val skipped = SparkEntry.queries.keys.toSeq.sorted
-        .filterNot(n => filt.exists(n.startsWith))
+      val skipped = SparkEntry.queries.keys.toSeq.sorted.filterNot(names)
       System.err.println(
-        s"[verify] PARTIAL run (filter=${filt.mkString(",")}): " +
+        s"[verify] PARTIAL run (filter=$filt): " +
           s"skipped ${skipped.size} queries — NOT a full correctness dump")
       Files.writeString(Paths.get(s"$outDir/PARTIAL_RUN.txt"),
-        s"filter=${filt.mkString(",")}\nskipped:\n${skipped.mkString("\n")}\n")
+        s"filter=$filt\nskipped:\n${skipped.mkString("\n")}\n")
     }
     spark.stop()
   }

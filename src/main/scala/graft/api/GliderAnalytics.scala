@@ -89,6 +89,7 @@ final case class GliderAnalytics(
   def gliderDaysPerDay: DataFrame =
     gliderDays.groupBy("day").agg(countDistinct(col(idCol)).as("active"))
 
+  /** A7 over the daily matrix: profiles across all datasets per day. */
   def profilesPerDay: DataFrame =
     dailyMatrix.groupBy("date").agg(sum("num_profiles").as("total"))
 

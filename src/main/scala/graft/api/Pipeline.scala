@@ -162,11 +162,6 @@ object Pipeline {
 
   // convenience delegates with library defaults -----------------------------
 
-  def asOf(left: DataFrame, right: DataFrame, keys: Seq[String],
-           leftTs: String, rightTs: String, payload: Seq[String]): DataFrame =
-    graft.operators.AsOf.asofJoinBackward(left, right, keys, leftTs,
-      rightTs, payload)
-
   def contamination(eval: DataFrame, benchmark: DataFrame, idCol: String,
                     textCol: String): DataFrame =
     Dedup.contamination(eval, benchmark, idCol, textCol, n = 3)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Optimized Product Quantization (OPQ) — the parametric variant of
@@ -100,14 +100,5 @@ object Opq {
     Pq.pqTopK(rotate(corpus, vecCol, r, "_opq"),
       rotate(queries, vecCol, r, "_opq"),
       idCol, "_opq", k, m, dim, codebookSize, rerankDepth)
-  }
-
-  /** Convenience column form of the rotation for callers composing with
-    * [[IvfPqIndex]]: `rotate` needs a frame, this gives the raw Column
-    * (e.g. to rotate inside an existing select). */
-  def rotateCol(vecCol: Column, rotation: Array[Array[Double]]): Column = {
-    import org.apache.spark.sql.functions.{array, typedlit}
-    array(rotation.toIndexedSeq.map(row =>
-      Similarity.dot(vecCol.cast("array<double>"), typedlit(row.toSeq))): _*)
   }
 }

@@ -34,10 +34,6 @@ object TextStats {
     size(regexp_extract_all(cjkSpaced(c), lit(TokenPattern), lit(0)))
       .cast("long")
 
-  /** Whitespace-split token count (the cheap estimator). */
-  def whitespaceTokenCount(c: Column): Column =
-    size(split(trim(c), "\\s+")).cast("long")
-
   private def countMatches(c: Column, pattern: String): Column =
     size(regexp_extract_all(c, lit(pattern), lit(0))).cast("long")
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming layer (SURVEY.md §2.9 extension): the reference's
@@ -43,14 +43,4 @@ object DailyRollup {
           .as("regs"))
       .select(col(keyCol), to_date(col("day_window.start")).as("date"),
         col("n"), col("regs"))
-
-  /** Sliding-window event rates (streaming-native extension). */
-  def slidingCounts(stream: DataFrame, tsCol: String, idCol: String,
-                    window_ : String = "1 hour", slide: String = "15 minutes",
-                    watermark: String = "2 hours"): DataFrame =
-    (if (stream.isStreaming) stream.withWatermark(tsCol, watermark) else stream)
-      .groupBy(window(col(tsCol), window_, slide), col(idCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col(idCol), col("window.start").as("w_start"),
-        col("window.end").as("w_end"), col("n"))
 }

@@ -48,6 +48,8 @@ class ApiFacadeSpec extends AnyFunSuite with SparkSpec {
       .collect()(0).getAs[Long]("active") == 2) // ru29 + its delayed twin
     assert(ga.gliderDaysPerDay.where($"day" === lit("2021-07-01"))
       .collect()(0).getAs[Long]("active") == 1) // gap day: ru29 range only
+    assert(ga.profilesPerDay.collect().map(r => r.get(0).toString -> r.getLong(1)).toMap ==
+      Map("2021-06-30" -> 2L, "2021-07-02" -> 1L, "2022-01-01" -> 1L))
   }
 
   test("mergeWithApi: orphan flag per join direction") {

@@ -119,6 +119,9 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
       (3L, true, false, false), (4L, true, true, false),
       (5L, false, false, true), (6L, true, true, true)
     ).toDF("id", "delayed_mode", "completed", "orphaned")
+    assert(StatusFilters.realTime(df).collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(StatusFilters.realTime(df, includeOrphaned = true)
+      .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 5L))
     assert(StatusFilters.realTimeActive(df).collect().map(_.getLong(0)).toSet == Set(1L))
     assert(StatusFilters.realTimeActive(df, includeOrphaned = true)
       .collect().map(_.getLong(0)).toSet == Set(1L, 5L))

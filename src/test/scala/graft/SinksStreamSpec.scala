@@ -407,12 +407,14 @@ class SinksStreamSpec extends AnyFunSuite with SparkSpec {
       plotParams = ErddapUrl.defaultPlotParams ++ Seq(
         ErddapUrl.markerParam("Filled Circle", 7),
         ErddapUrl.rangeParam("y", ascending = false, scale = "Log"),
+        ErddapUrl.colorBarParam("Thermal", scale = "Log", min = "5", max = "30"),
         ".draw" -> "lines",
         ".color" -> s"0x${ErddapUrl.colorCodes("red")}"),
       response = "largePng")
     assert(custom.contains("/tabledap/ds.largePng?time,temp&"))
     assert(custom.contains(".marker=7%7C7"))
     assert(custom.contains(".yRange=%7C%7Cfalse%7CLog"))
+    assert(custom.contains(".colorBar=Thermal%7CC%7CLog%7C5%7C30%7C&"))
     assert(custom.contains(".draw=lines"))
     assert(custom.contains(".color=0xFF0000"))
     assert(!custom.contains(".draw=markers")) // override replaced in place

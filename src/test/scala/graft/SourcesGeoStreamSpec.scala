@@ -53,6 +53,21 @@ class SourcesGeoStreamSpec extends AnyFunSuite with SparkSpec {
     assert(bad.isNullAt(0)) // errors='coerce' → null time
   }
 
+  test("ErddapCsv.withDatasetIdFromFilename: dataset id from each file name (S10)") {
+    val dir = Files.createTempDirectory("erddap_dac").toFile
+    Seq("ru29-20210630T1343_obs.csv", "sp10-20220101T0000_gts_obs.csv")
+      .zipWithIndex.foreach { case (name, i) =>
+        Files.writeString(new java.io.File(dir, name).toPath,
+          s"time,latitude,Profile ID\nUTC,degrees_north,1\n2021-06-01T03:12:00Z,39.1,$i\n")
+      }
+    val schema = StructType(Seq(StructField("time", TimestampType),
+      StructField("latitude", DoubleType), StructField("profile_id", LongType)))
+    val df = ErddapCsv.withDatasetIdFromFilename(
+      ErddapCsv.read(spark, dir.getAbsolutePath, schema))
+    assert(df.select("profile_id", "dataset_id").as[(Long, String)].collect().toMap ==
+      Map(0L -> "ru29-20210630T1343", 1L -> "sp10-20220101T0000"))
+  }
+
   test("ErddapCsv.cleanCatalog drops allDatasets and delayed twins") {
     val cat = Seq("allDatasets", "ru29-20210630T1343", "ru29-20210630T1343-delayed")
       .toDF("dataset_id")

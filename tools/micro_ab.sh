@@ -2,14 +2,15 @@
 # Interleaved micro A/B on a query subset: cur, base, cur, base, … each a
 # fresh raw-java JVM (no sbt); per-query MIN per side; prints ratios.
 # Usage: tools/micro_ab.sh <namePrefix,...> [rounds=3]
-# Requires /tmp/graft_cp.txt (current) and /tmp/graft_cp_base.txt (baseline).
+# Requires /tmp/graft_cp.txt (current) and /tmp/graft_cp_base.txt (baseline);
+# both sides must have the graft.Harness main.
 set -euo pipefail
 PREFIX=${1:?usage: micro_ab.sh <namePrefix,...> [rounds]}
 ROUNDS=${2:-3}
-OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
+. "$(dirname "$0")/jdk17_opens.sh"
 run() { # cp-file out-file
   java $OPENS -Xmx8g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$(cat "$1")" graft.MicroBench "$PREFIX" 2>/dev/null \
+    -cp "$(cat "$1")" graft.Harness micro "$PREFIX" 2>/dev/null \
     | grep '^{"metric"' > "$2"
 }
 for i in $(seq 1 "$ROUNDS"); do

@@ -2,12 +2,13 @@
 # Per-query isolated A/B: each query runs ALONE in a fresh JVM per round
 # per side (no same-session contamination between subset members).
 # Usage: tools/micro_ab1.sh <query1,query2,...> [rounds=3]
+# Requires /tmp/graft_cp.txt and /tmp/graft_cp_base.txt as micro_ab.sh does.
 set -euo pipefail
 QUERIES=${1:?usage: micro_ab1.sh <q1,q2,...> [rounds]}
 ROUNDS=${2:-3}
-OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
+. "$(dirname "$0")/jdk17_opens.sh"
 run() { java $OPENS -Xmx8g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$(cat "$1")" graft.MicroBench "$2" 2>/dev/null | grep '^{"metric"'; }
+  -cp "$(cat "$1")" graft.Harness micro "$2" 2>/dev/null | grep '^{"metric"'; }
 IFS=',' read -ra QS <<< "$QUERIES"
 for q in "${QS[@]}"; do
   for i in $(seq 1 "$ROUNDS"); do

@@ -9,10 +9,10 @@ PREFIX=${1:?usage: micro_bench.sh <namePrefix,...> [rounds] [tag]}
 ROUNDS=${2:-3}
 TAG=${3:-micro}
 CP=$(cat /tmp/graft_cp.txt)
-OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
+. "$(dirname "$0")/jdk17_opens.sh"
 for i in $(seq 1 "$ROUNDS"); do
   java $OPENS -Xmx8g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" graft.MicroBench "$PREFIX" \
+    -cp "$CP" graft.Harness micro "$PREFIX" \
     2>/dev/null | grep '^{"metric"' > "/tmp/micro_${TAG}_$i.json"
 done
 python3 - "$TAG" "$ROUNDS" <<'EOF'

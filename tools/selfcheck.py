@@ -3,6 +3,7 @@
 produced by graft.Verify, runs each oracle SQL from oracle_sql.json in DuckDB
 over the same sf tables, and compares strictly (schema names, row count,
 Arrow type classes, ordered values). Usage: selfcheck.py <sfDir> <verifyOutDir>
+A table may be one parquet file or a directory of them (a split table).
 
 The Arrow-type-class check exists because the driver hashes CANONICAL VALUE
 REPRS: DuckDB sum(BIGINT) silently widens to DECIMAL(38,0)/HUGEINT whose
@@ -11,7 +12,7 @@ repr differs from Spark's int64 even when the values are numerically equal
 hid it). Types are compared by repr-equivalence class, not exact width:
 int32 vs int64 both render "1435" so they pass; decimal vs int, decimal vs
 double, tz vs naive timestamps render differently so they fail."""
-import json, math, sys
+import json, math, os, sys
 import duckdb
 
 
@@ -50,7 +51,10 @@ sfdir, outdir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+    path = f"{sfdir}/{t}.parquet"
+    if os.path.isdir(path):
+        path += "/*.parquet"
+    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
 oracles = json.load(open(f"{outdir}/oracle_sql.json"))
 fails = []
